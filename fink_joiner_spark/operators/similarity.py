@@ -156,10 +156,11 @@ def _pin_once(df: DataFrame, tag: str | None = None) -> DataFrame:
     covers those for free)."""
     from fink_joiner_spark.operators import graph
 
-    if _PIN_AUDIT is not None:
-        _PIN_AUDIT.append(df)
     if _measure_skip("SPARK_GRAFT_PIN_SKIP", tag):
         return df
+    # audit only frames that really get pinned in the executed plan
+    if _PIN_AUDIT is not None:
+        _PIN_AUDIT.append(df)
     if os.environ.get("SPARK_GRAFT_PIN_MODE", "persist") == "checkpoint":
         out = df.localCheckpoint(eager=False)
         graph._PENDING_FREE.append(graph._ckpt_handle(out))  # noqa: SLF001

@@ -36,18 +36,102 @@ with e.g. 65k buckets rewrites ~1.5 GB per touched bucket. All
 filesystem effects go through the Hadoop FS API (identical semantics
 on local disk, HDFS, S3A) — the previous os/shutil implementation was
 driver-local-disk only.
+
+Per-round cost is kept to the Spark jobs the data needs:
+
+* **known-schema reads** — every commit records the written schema
+  (all fields nullable, exactly what parquet inference returns) as a
+  ``_schema`` manifest annotation, and reads pass it to
+  ``spark.read.schema``, so resolving a snapshot launches no
+  footer-inference job. Stores committed before the annotation
+  existed fall back to inference until their next commit adds it;
+* **AQE-sized bucket writes** — ``repartition("_bucket")`` without a
+  count: AQE coalesces the shuffle to the data's size, and each bucket
+  still lands in exactly one task, so every bucket directory holds one
+  file. In :meth:`SnapshotStore.upsert` that one shuffle also serves
+  the latest-per-key window, partitioned by bucket and key;
+* **one diff** — :func:`multiset_diff` computes inserts and retracts
+  in a single signed-count aggregate (``exceptAll`` runs the same
+  aggregate once per direction); :meth:`SnapshotStore.replace`
+  evaluates it once and returns it in changelog form.
 """
 
 from __future__ import annotations
 
+import json
+import logging
 import os
+import time
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructType
 
 from fink_joiner_spark.operators.dedup import latest_per_key
 from fink_joiner_spark.versioned import VersionedStore
+
+_log = logging.getLogger(__name__)
+
+
+def multiset_diff(new: DataFrame, old: DataFrame) -> DataFrame:
+    """``new`` minus ``old`` as a multiset, in changelog form: each row
+    ``new`` holds n more times than ``old`` appears n times with
+    ``is_retract`` false, each row ``old`` holds n more times appears n
+    times with ``is_retract`` true. Columns match by name.
+
+    Row for row the union of ``new.exceptAll(old)`` and
+    ``old.exceptAll(new)``: Spark rewrites ``exceptAll`` into this same
+    signed-count aggregate (NULLs group together, NaN and -0.0 are
+    normalised as grouping keys), but one aggregate over both sides
+    replaces two, each a shuffle of both inputs."""
+    from pyspark.sql import functions as F
+
+    cols = [F.col("`" + c.replace("`", "``") + "`") for c in new.columns]
+    n = F.col("_diff_n")
+    signed = new.withColumn("_diff_n", F.lit(1)).unionByName(
+        old.withColumn("_diff_n", F.lit(-1))
+    )
+    return (
+        signed.groupBy(*cols)
+        .agg(F.sum(n).alias("_diff_n"))
+        .where(n != 0)
+        .select(
+            *cols,
+            (n < 0).alias("is_retract"),
+            # one output row per unit of count
+            F.explode(F.array_repeat(F.lit(0), F.abs(n).cast("int"))).alias("_diff_rep"),
+        )
+        .drop("_diff_rep")
+    )
+
+
+def _nullable_json(schema: StructType) -> str:
+    """``schema`` with every field, element and value nullable — the
+    schema parquet footer inference returns for what Spark wrote."""
+
+    def walk(t):
+        if isinstance(t, dict):
+            return {
+                k: True if k in ("nullable", "containsNull", "valueContainsNull")
+                else walk(v)
+                for k, v in t.items()
+            }
+        if isinstance(t, list):
+            return [walk(v) for v in t]
+        return t
+
+    return json.dumps(walk(schema.jsonValue()))
+
+
+def _debug(op: str, path: str, version: int | None, buckets: int, phases: dict) -> None:
+    """One DEBUG record per store operation, from values already in
+    hand: it runs no Spark action."""
+    if _log.isEnabledFor(logging.DEBUG):
+        _log.debug(
+            "%s %s version=%s buckets=%d %s", op, path, version, buckets,
+            " ".join(f"{k}_s={v:.3f}" for k, v in phases.items()),
+        )
 
 
 class SnapshotStore:
@@ -157,48 +241,65 @@ class SnapshotStore:
             self.path, f"v{version:06d}", self._DATASET, f"_bucket={bucket}"
         )
 
-    def bucket_dirs(self, buckets: Sequence[int | str] | None = None) -> list[str]:
-        """Current data directories, optionally restricted to ``buckets``."""
-        st = self._state()
-        if st is None:
+    def bucket_dirs(self, buckets: Sequence[int | str] | None = None,
+                    version: int | None = None) -> list[str]:
+        """Data directories of committed ``version`` (default: current),
+        optionally restricted to ``buckets``."""
+        store = self._store()
+        if version is None:
+            version = store.current()
+        if version is None:
             return []
         want = None if buckets is None else {str(b) for b in buckets}
+        refs = {
+            part.split("=", 1)[1]: refs[-1]
+            for part, refs in store.parts(self._DATASET, version).items()
+        }
         return [
             self._bucket_dir(v, b)
-            for b, v in sorted(st["buckets"].items(), key=lambda kv: int(kv[0]))
+            for b, v in sorted(refs.items(), key=lambda kv: int(kv[0]))
             if want is None or b in want
         ]
 
     def read(self, spark: SparkSession, buckets: Sequence[int | str] | None = None
              ) -> DataFrame | None:
-        dirs = self.bucket_dirs(buckets)
-        if not dirs:
-            return None
-        # read the bucket dirs directly (no basePath): the original
-        # column set and order, sans the _bucket partition column
-        return spark.read.parquet(*dirs)
+        """The current snapshot, optionally restricted to ``buckets``."""
+        return self._read_version(spark, None, buckets)
 
     def read_previous(self, spark: SparkSession) -> DataFrame | None:
         """The snapshot as of the PREVIOUS commit (one upsert back) —
         its referenced directories are retained by keep-2 GC."""
-        store = self._store(spark)
-        vs = store.committed_versions()
-        if len(vs) < 2:
-            return None
-        prev = vs[-2]
-        dirs = [
-            self._bucket_dir(refs[-1], part.split("=", 1)[1])
-            for part, refs in sorted(store.parts(self._DATASET, prev).items())
-        ]
-        return spark.read.parquet(*dirs) if dirs else None
+        vs = self._store(spark).committed_versions()
+        return self._read_version(spark, vs[-2]) if len(vs) >= 2 else None
 
-    def _read_version(self, spark: SparkSession, version: int) -> DataFrame | None:
+    def _read_version(
+        self, spark: SparkSession, version: int | None,
+        buckets: Sequence[int | str] | None = None,
+    ) -> DataFrame | None:
+        """Committed ``version`` (default: current) read from its bucket
+        dirs directly (no basePath: the original column set and order,
+        sans the _bucket partition column), with the schema recorded at
+        commit when there is one — a scan whose resolution launches no
+        Spark job."""
         store = self._store(spark)
-        dirs = [
-            self._bucket_dir(refs[-1], part.split("=", 1)[1])
-            for part, refs in sorted(store.parts(self._DATASET, version).items())
-        ]
-        return spark.read.parquet(*dirs) if dirs else None
+        if version is None:
+            version = store.current()
+        if version is None:
+            return None
+        return self._read_dirs(
+            spark, self.bucket_dirs(buckets, version),
+            store.annotation("_schema", version),
+        )
+
+    @staticmethod
+    def _read_dirs(spark: SparkSession, dirs: list[str], schema: str | None
+                   ) -> DataFrame | None:
+        if not dirs:
+            return None
+        reader = spark.read
+        if schema is not None:
+            reader = reader.schema(StructType.fromJson(json.loads(schema)))
+        return reader.parquet(*dirs)
 
     def diff(
         self,
@@ -221,13 +322,11 @@ class SnapshotStore:
         Delta/Iceberg pattern): the changelog a consumer missed can
         always be reconstructed from retained versions, so changelog
         delivery needs no separate durability story. Plan: one
-        full-column anti-join per direction, keyed by all columns —
-        and because untouched buckets share identical directories
-        between versions, a bucket-pruned variant diffs only the
-        buckets whose version advanced.
+        :func:`multiset_diff` aggregate over both versions — and
+        because untouched buckets share identical directories between
+        versions, a bucket-pruned variant diffs only the buckets whose
+        version advanced.
         """
-        from pyspark.sql import functions as F
-
         if from_version is None and to_version is None:
             cur, prev = self.read(spark), self.read_previous(spark)
         else:
@@ -251,26 +350,26 @@ class SnapshotStore:
             prev = self._read_version(spark, from_v)
         if cur is None or prev is None:
             return None
-        inserts = cur.exceptAll(prev).withColumn("is_retract", F.lit(False))
-        retracts = prev.exceptAll(cur).withColumn("is_retract", F.lit(True))
-        return inserts.unionByName(retracts)
+        return multiset_diff(cur, prev)
 
     # -- writing ------------------------------------------------------------
 
     def _commit_rows(
         self, store: VersionedStore, v: int, touched: Sequence[int | str],
-        batch_id: int | None,
+        schema: str, batch_id: int | None,
     ) -> list[tuple[str, str, int]]:
         """Manifest for version ``v``: carry every untouched bucket's
         reference forward, reference the freshly written bucket dirs (a
         bucket every row of which disappeared drops out naturally), and
-        record the applied batch id as an annotation row."""
+        record the written schema and the applied batch id as
+        annotation rows."""
         touched_parts = {f"_bucket={b}" for b in touched}
         rows = store.carry_except(store.state_rows(), self._DATASET, touched_parts)
-        rows = [r for r in rows if r[0] != "_last_batch"]
+        rows = [r for r in rows if r[0] not in ("_last_batch", "_schema")]
         rows += [
             (self._DATASET, p, v) for p in store.written_parts(v, self._DATASET)
         ]
+        rows.append(("_schema", schema, v))
         if batch_id is not None:
             rows.append(("_last_batch", str(batch_id), v))
         return rows
@@ -295,9 +394,12 @@ class SnapshotStore:
         ``batch_id`` annotation marks the batch applied and the replay
         is a no-op that leaves the already-durable delta untouched (the
         Delta-Lake txn-app-id idempotent-sink pattern).
-        """
-        from pyspark.sql import functions as F
 
+        The delta is lazy: both frames come from one
+        :func:`multiset_diff` of the staged buckets against their old
+        contents, evaluated only if ``on_delta`` or the caller uses it.
+        """
+        t0 = time.perf_counter()
         spark = batch_df.sparkSession
         store = self._writer(spark)
         st = self._state()
@@ -306,95 +408,111 @@ class SnapshotStore:
             and st is not None
             and st.get("last_batch") == batch_id
         ):  # batch fully committed before a crash: replay is a no-op
+            _debug("upsert", self.path, st["version"], 0,
+                   {"total": time.perf_counter() - t0})
             empty = batch_df.limit(0)
             return empty, empty
-        batch_latest = latest_per_key(
-            batch_df, self.keys, self.order_col, self.tie_breakers
-        )
+        bexpr = self._bucket_expr()
+        # a bucket is a function of the key, so the batch's buckets are
+        # those of its latest rows
         touched = sorted(
-            r[0]
-            for r in batch_latest.select(
-                self._bucket_expr().alias("_b")
-            ).distinct().collect()
+            r[0] for r in batch_df.select(bexpr.alias("_b")).distinct().collect()
         )
+        t1 = time.perf_counter()
         if not touched:  # empty batch: no version bump, empty delta
+            _debug("upsert", self.path, None, 0, {"touched": t1 - t0})
             empty = batch_df.limit(0)
             if on_delta is not None:
                 on_delta(empty, empty)
             return empty, empty
         old = self.read(spark, buckets=touched)
-        if old is None:
-            new = batch_latest
-        else:
-            new = latest_per_key(
-                old.unionByName(batch_latest), self.keys, self.order_col, self.tie_breakers
-            )
+        rows = batch_df if old is None else old.unionByName(batch_df)
+        # one shuffle by bucket serves both the latest-per-key window
+        # (partitioned by bucket and keys, which that shuffle satisfies)
+        # and the bucketed write
+        new = latest_per_key(
+            rows.withColumn("_bucket", bexpr).repartition("_bucket"),
+            ["_bucket", *self.keys], self.order_col, self.tie_breakers,
+        )
+        schema = _nullable_json(new.drop("_bucket").schema)
         with store.transaction() as v:
-            (
-                new.withColumn("_bucket", self._bucket_expr())
-                .repartition(max(1, min(len(touched), 32)), "_bucket")
-                .write.partitionBy("_bucket")
-                .mode("overwrite")
-                .parquet(f"{store.vdir(v)}/{self._DATASET}")
+            new.write.partitionBy("_bucket").mode("overwrite").parquet(
+                f"{store.vdir(v)}/{self._DATASET}"
             )
+            t2 = time.perf_counter()
             # re-read the staged bucket dirs (sans partition column):
             # stable lineage for the diff
-            new = spark.read.parquet(
-                *[self._bucket_dir(v, b) for b in touched]
+            new = self._read_dirs(
+                spark, [self._bucket_dir(v, b) for b in touched], schema
             )
             if old is None:
                 inserts, retracts = new, new.limit(0)
             else:
-                inserts = new.exceptAll(old)
-                retracts = old.exceptAll(new)
+                delta = multiset_diff(new, old)
+                inserts = delta.where(~delta.is_retract).drop("is_retract")
+                retracts = delta.where(delta.is_retract).drop("is_retract")
             if on_delta is not None:  # durable delta BEFORE the commit point
                 on_delta(inserts, retracts)
-            store.commit(v, self._commit_rows(store, v, touched, batch_id))
+            t3 = time.perf_counter()
+            store.commit(v, self._commit_rows(store, v, touched, schema, batch_id))
+        _debug("upsert", self.path, v, len(touched), {
+            "touched": t1 - t0, "write": t2 - t1, "delta": t3 - t2,
+            "commit": time.perf_counter() - t3,
+        })
         return inserts, retracts
 
-    def replace(self, new: DataFrame) -> tuple[DataFrame, DataFrame]:
+    def replace(self, new: DataFrame) -> DataFrame:
         """Multiset-diff replace: swap the stored relation for ``new``,
-        returning (inserts, retracts) — exact ``toRetractStream``
-        deltas for a fully re-derived relation (the snapshot-join
-        pipeline's result store). Unlike :meth:`upsert` (which knows
+        returning the exact ``toRetractStream`` delta for a fully
+        re-derived relation (the snapshot-join pipeline's result store)
+        in changelog form — ``new``'s columns plus ``is_retract``, as
+        :meth:`diff` returns. Unlike :meth:`upsert` (which knows
         touched buckets from the batch), a full replace must diff
         everything — but the REWRITE is still bucket-pruned: only
         key-hash buckets that actually changed are written to the new
         version; unchanged buckets carry their references forward.
         (Compute is O(new+old) — inherent to re-deriving a full join
         result; on a production cluster this store is a Delta/Iceberg
-        table and the delta comes from MERGE instead.)"""
+        table and the delta comes from MERGE instead.)
+
+        Both ``new`` and the delta are pinned with ``localCheckpoint``:
+        the relation is evaluated once for the diff and the write, the
+        diff once for changed-bucket discovery and the caller's
+        changelog write."""
         from pyspark.sql import functions as F
 
+        t0 = time.perf_counter()
         spark = new.sparkSession
         store = self._writer(spark)
-        # pin the computed relation: one evaluation serves diff + write
         new = new.localCheckpoint(eager=True)
+        t1 = time.perf_counter()
         bexpr = self._bucket_expr()
         old = self.read(spark)
         if old is None:
-            inserts, retracts = new, new.limit(0)
+            delta = new.withColumn("is_retract", F.lit(False))
         else:
-            inserts, retracts = new.exceptAll(old), old.exceptAll(new)
+            delta = multiset_diff(new, old).localCheckpoint(eager=True)
         changed = sorted(
-            r[0]
-            for r in inserts.select(bexpr.alias("_b"))
-            .unionByName(retracts.select(bexpr.alias("_b")))
-            .distinct()
-            .collect()
+            r[0] for r in delta.select(bexpr.alias("_b")).distinct().collect()
         )
+        t2 = time.perf_counter()
+        v = None
         if changed:
+            schema = _nullable_json(new.schema)
             with store.transaction() as v:
                 (
                     new.withColumn("_bucket", bexpr)
                     .where(F.col("_bucket").isin([int(b) for b in changed]))
-                    .repartition(max(1, min(len(changed), 32)), "_bucket")
+                    .repartition("_bucket")
                     .write.partitionBy("_bucket")
                     .mode("overwrite")
                     .parquet(f"{store.vdir(v)}/{self._DATASET}")
                 )
-                store.commit(v, self._commit_rows(store, v, changed, None))
-        return inserts, retracts
+                store.commit(v, self._commit_rows(store, v, changed, schema, None))
+        _debug("replace", self.path, v, len(changed), {
+            "eval": t1 - t0, "diff": t2 - t1, "write": time.perf_counter() - t2,
+        })
+        return delta
 
 
 def run_dedup_stream(

@@ -260,10 +260,11 @@ def test_kill_midrun_restart_equals_uninterrupted(spark, sf_dir, tmp_path):
 
 
 def test_bucketed_upsert_leaves_untouched_buckets_alone(spark, tmp_path):
-    """The poor-man's-MERGE contract: an upsert touching one key-hash
-    bucket must rewrite ONLY that bucket — every other bucket's current
-    data directory stays the same path with byte-identical files, and
-    per-batch I/O is O(touched buckets), not O(snapshot)."""
+    """The poor-man's-MERGE contract: an upsert or replace touching one
+    key-hash bucket must rewrite ONLY that bucket — every other bucket's
+    current data directory stays the same path with byte-identical
+    files, and per-batch I/O is O(touched buckets), not O(snapshot).
+    Every written bucket directory holds exactly one parquet file."""
     import hashlib
 
     def bucket_files(store):
@@ -277,28 +278,177 @@ def test_bucketed_upsert_leaves_untouched_buckets_alone(spark, tmp_path):
             }, d
         return out
 
+    def only_changed_rewritten(before, after):
+        changed = [b for b in after if after[b] != before[b]]
+        assert len(changed) == 1  # exactly the bucket the changed key hashes into
+        for b in after:
+            if b not in changed:
+                assert after[b] == before[b]  # same dir, byte-identical files
+        assert len(after[changed[0]][0]) == 1  # one file per written bucket
+
+    # coalescing off: a bucket must land in one task whatever the
+    # partition count, not only when AQE packs a tiny input into one
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    was = spark.conf.get(coalesce)
+    spark.conf.set(coalesce, "false")
+    try:
+        schema = "k long, ts long, v string"
+        store = SnapshotStore(str(tmp_path / "snap"), ["k"], "ts", n_buckets=8)
+        store.upsert(spark.createDataFrame([(k, 10, f"v{k}") for k in range(64)], schema))
+        before = bucket_files(store)
+        assert len(before) == 8  # 64 keys cover all 8 buckets
+        assert all(len(files) == 1 for files, _ in before.values())
+
+        i2, r2 = store.upsert(spark.createDataFrame([(5, 20, "v5b")], schema))
+        assert i2.count() == 1 and r2.count() == 1
+        after = bucket_files(store)
+        only_changed_rewritten(before, after)
+
+        # snapshot content is still the correct latest-per-key answer
+        got = sorted(tuple(r) for r in store.read(spark).collect())
+        want = sorted([(k, 10, f"v{k}") for k in range(64) if k != 5] + [(5, 20, "v5b")])
+        assert got == want
+
+        # a full replace differing in one row rewrites only that row's bucket
+        want = [r for r in want if r[0] != 9] + [(9, 30, "v9c")]
+        delta = store.replace(spark.createDataFrame(want, schema))
+        assert sorted(tuple(r) for r in delta.collect()) == [
+            (9, 10, "v9", True), (9, 30, "v9c", False)
+        ]
+        only_changed_rewritten(after, bucket_files(store))
+        assert sorted(tuple(r) for r in store.read(spark).collect()) == sorted(want)
+    finally:
+        spark.conf.set(coalesce, was)
+
+
+def _jobs_launched(spark, fn):
+    """(fn(), ids of the Spark jobs fn launched on this thread)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_snapshot_read_launches_no_spark_job(spark, tmp_path):
+    """A commit records the written schema as a ``_schema`` manifest
+    annotation, so resolving a read runs no Spark job: no parquet
+    footer-inference job. A store committed without the annotation
+    (the earlier layout) falls back to inference, reads back the same
+    rows and columns, and regains the annotation on its next upsert."""
+    import json
+
+    from fink_joiner_spark import versioned
+
+    schema = "k long, ts long, v string, x double"
     store = SnapshotStore(str(tmp_path / "snap"), ["k"], "ts", n_buckets=8)
-    b1 = spark.createDataFrame([(k, 10, f"v{k}") for k in range(64)], "k long, ts long, v string")
-    store.upsert(b1)
-    before = bucket_files(store)
-    assert len(before) == 8  # 64 keys cover all 8 buckets
+    store.upsert(spark.createDataFrame(
+        [(k, 10, f"v{k}", k / 2) for k in range(40)] + [(None, 1, None, None)], schema
+    ))
+    df, jobs = _jobs_launched(spark, lambda: store.read(spark))
+    assert jobs == []
+    want_cols, want_rows = df.columns, sorted(map(tuple, df.collect()), key=repr)
+    assert want_cols == ["k", "ts", "v", "x"] and len(want_rows) == 41
 
-    i2, r2 = store.upsert(
-        spark.createDataFrame([(5, 20, "v5b")], "k long, ts long, v string")
+    # rewrite the current manifest without its _schema row
+    vs = store._store(spark)
+    cur = vs.current()
+    path = f"{vs.vdir(cur)}/_state.json"
+    rows = json.loads(vs.fs.read_utf8(path))
+    assert [r[0] for r in rows].count("_schema") == 1
+    vs.fs.delete(path, recursive=False)
+    assert vs.fs.create_exclusive(path, json.dumps([r for r in rows if r[0] != "_schema"]))
+    versioned._MANIFEST_CACHE.pop((vs.root, cur), None)
+
+    legacy, jobs = _jobs_launched(spark, lambda: store.read(spark))
+    assert jobs, "the job probe must see the inference job of a legacy read"
+    assert legacy.schema == df.schema
+    assert sorted(map(tuple, legacy.collect()), key=repr) == want_rows
+
+    store.upsert(spark.createDataFrame([(3, 20, "v3b", 9.5)], schema))
+    assert store._store(spark).annotation("_schema") is not None
+    got = sorted(map(tuple, store.read(spark).collect()), key=repr)
+    assert got == sorted(
+        [r for r in want_rows if r[0] != 3] + [(3, 20, "v3b", 9.5)], key=repr
     )
-    assert i2.count() == 1 and r2.count() == 1
-    after = bucket_files(store)
 
-    changed = [b for b in after if after[b] != before[b]]
-    assert len(changed) == 1  # exactly the bucket k=5 hashes into
-    for b in after:
-        if b not in changed:
-            assert after[b] == before[b]  # same dir, byte-identical files
 
-    # snapshot content is still the correct latest-per-key answer
-    got = sorted(tuple(r) for r in store.read(spark).collect())
-    want = sorted([(k, 10, f"v{k}") for k in range(64) if k != 5] + [(5, 20, "v5b")])
-    assert got == want
+def _bag(rows):
+    """Multiset of rows compared by repr (NaN == NaN, -0.0 == 0.0)."""
+    from collections import Counter
+
+    return Counter(
+        tuple(repr(v + 0.0 if isinstance(v, float) else v) for v in r) for r in rows
+    )
+
+
+def _except_all_delta(new, old):
+    """The changelog exceptAll defines: new-only rows as inserts,
+    old-only rows as retracts, duplicates counted."""
+    return _bag(
+        [(*r, False) for r in new.exceptAll(old).collect()]
+        + [(*r, True) for r in old.exceptAll(new).collect()]
+    )
+
+
+def test_multiset_diff_equals_except_all(spark, tmp_path):
+    """The one-aggregate diff behind upsert, replace and diff() is
+    exceptAll in both directions: duplicate rows, NULL keys, NULL
+    non-key columns and NaN doubles included."""
+    from fink_joiner_spark.streaming.dedup_stream import multiset_diff
+
+    nan = float("nan")
+    schema = "k long, ts long, v string, x double"
+    old = spark.createDataFrame([
+        (1, 1, "a", 1.0), (1, 1, "a", 1.0), (None, 1, "n", nan),
+        (2, 1, None, 2.0), (3, 1, "c", nan), (5, 1, "z", 0.0), (6, 1, "q", 6.0),
+    ], schema)
+    new = spark.createDataFrame([
+        (1, 1, "a", 1.0), (None, 1, "n", nan), (None, 1, "n", nan),
+        (2, 1, None, 2.0), (3, 2, "c", nan), (5, 1, "z", -0.0),
+        (7, 1, None, None), (7, 1, None, None),
+    ], schema)
+    want = _except_all_delta(new, old)
+    assert sum(want.values()) == 7  # 4 inserts, 3 retracts
+    assert _bag(multiset_diff(new, old).collect()) == want
+
+    # through replace, and through diff() over the versions it committed
+    store = SnapshotStore(str(tmp_path / "r"), ["k"], "ts", n_buckets=4)
+    assert _bag(store.replace(old).collect()) == _bag((*r, False) for r in old.collect())
+    v1 = store.current_version()
+    assert _bag(store.replace(new).collect()) == want
+    v2 = store.current_version()
+    assert _bag(store.read(spark).collect()) == _bag(new.collect())
+    assert _bag(store.diff(spark, from_version=v1, to_version=v2).collect()) == want
+
+    # through upsert's on_delta: latest-per-key snapshots before/after
+    store = SnapshotStore(str(tmp_path / "u"), ["k"], "ts", n_buckets=4)
+    store.upsert(spark.createDataFrame([
+        (1, 1, "a", 1.0), (None, 1, "n", nan), (2, 1, None, 2.0),
+        (3, 1, "c", nan), (6, 1, "q", 6.0),
+    ], schema))
+    before = spark.createDataFrame(store.read(spark).collect(), schema)
+    seen = {}
+
+    def capture(ins, rets):
+        seen["delta"] = _bag(
+            [(*r, False) for r in ins.collect()] + [(*r, True) for r in rets.collect()]
+        )
+
+    store.upsert(spark.createDataFrame([
+        (None, 2, "n2", nan), (2, 1, None, 2.0), (3, 2, "c", nan),
+        (7, 1, None, None), (6, 0, "stale", 0.0),
+    ], schema), on_delta=capture)
+    after = spark.createDataFrame(store.read(spark).collect(), schema)
+    want = _except_all_delta(after, before)
+    assert sum(want.values()) == 5  # 3 inserts, 2 retracts
+    assert seen["delta"] == want
 
 
 def test_retract_fidelity_single_reversion(spark, tmp_path):
