@@ -81,6 +81,8 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
+        # static: sized with the code cache below
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
     )
     # ReservedCodeCacheSize: ~120 distinct queries generate enough
@@ -101,6 +103,13 @@ def get_spark(
     # warnings — a transient host event, not cache exhaustion. If the
     # registry ever genuinely outgrows 2g, the lever is fewer codegen
     # classes (shared query shapes), not a bigger reservation.
+    # The code cache only holds what the JIT compiles; Janino's output
+    # is held by Spark's codegen class cache, whose default of 100
+    # entries is below one CRMLS snapshot-join round (~129 distinct
+    # generated classes): every steady-state round recompiled 50-60 of
+    # them with Janino, and HotSpot JIT-compiled each new class again.
+    # 1024 entries (spark.sql.codegen.cache.maxEntries below) gave 0
+    # Janino compiles from the second round on.
     # PerMethod/PerBytecodeRecompilationCutoff=-1: with ~190 distinct
     # query plans sharing one JVM, HotSpot's made-not-compilable cutoff
     # (~400 deopts) stochastically dropped interpreted-HOF-heavy

@@ -336,16 +336,29 @@ def _jobs_launched(spark, fn):
     return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def _drop_annotation(spark, store, name):
+    """Rewrite ``store``'s current manifest without its ``name``
+    annotation row: the manifest an earlier layout committed."""
+    import json
+
+    from fink_joiner_spark import versioned
+
+    vs = store._store(spark)
+    cur = vs.current()
+    path = f"{vs.vdir(cur)}/_state.json"
+    rows = json.loads(vs.fs.read_utf8(path))
+    assert [r[0] for r in rows].count(name) == 1
+    vs.fs.delete(path, recursive=False)
+    assert vs.fs.create_exclusive(path, json.dumps([r for r in rows if r[0] != name]))
+    versioned._MANIFEST_CACHE.pop((vs.root, cur), None)
+
+
 def test_snapshot_read_launches_no_spark_job(spark, tmp_path):
     """A commit records the written schema as a ``_schema`` manifest
     annotation, so resolving a read runs no Spark job: no parquet
     footer-inference job. A store committed without the annotation
     (the earlier layout) falls back to inference, reads back the same
     rows and columns, and regains the annotation on its next upsert."""
-    import json
-
-    from fink_joiner_spark import versioned
-
     schema = "k long, ts long, v string, x double"
     store = SnapshotStore(str(tmp_path / "snap"), ["k"], "ts", n_buckets=8)
     store.upsert(spark.createDataFrame(
@@ -356,16 +369,7 @@ def test_snapshot_read_launches_no_spark_job(spark, tmp_path):
     want_cols, want_rows = df.columns, sorted(map(tuple, df.collect()), key=repr)
     assert want_cols == ["k", "ts", "v", "x"] and len(want_rows) == 41
 
-    # rewrite the current manifest without its _schema row
-    vs = store._store(spark)
-    cur = vs.current()
-    path = f"{vs.vdir(cur)}/_state.json"
-    rows = json.loads(vs.fs.read_utf8(path))
-    assert [r[0] for r in rows].count("_schema") == 1
-    vs.fs.delete(path, recursive=False)
-    assert vs.fs.create_exclusive(path, json.dumps([r for r in rows if r[0] != "_schema"]))
-    versioned._MANIFEST_CACHE.pop((vs.root, cur), None)
-
+    _drop_annotation(spark, store, "_schema")
     legacy, jobs = _jobs_launched(spark, lambda: store.read(spark))
     assert jobs, "the job probe must see the inference job of a legacy read"
     assert legacy.schema == df.schema
@@ -449,6 +453,127 @@ def test_multiset_diff_equals_except_all(spark, tmp_path):
     want = _except_all_delta(after, before)
     assert sum(want.values()) == 5  # 3 inserts, 2 retracts
     assert seen["delta"] == want
+
+
+def _parquet_files(d):
+    return [f for f in os.listdir(d) if f.endswith(".parquet")]
+
+
+def test_small_store_commits_one_bucket(spark, tmp_path):
+    """The bucket count follows the store's size: a small store commits
+    one bucket, one parquet file per version, and records the count in
+    its manifest. An explicit n_buckets is a floor, rounded up to a
+    power of two."""
+    schema = "k long, ts long, v string"
+    rows = [(k, 10, f"v{k}") for k in range(64)]
+    store = SnapshotStore(str(tmp_path / "one"), ["k"], "ts")
+    store.upsert(spark.createDataFrame(rows, schema))
+    store.upsert(spark.createDataFrame([(5, 20, "v5b")], schema))
+    assert store.n_buckets == 1
+    assert store._store(spark).annotation("_n_buckets") == "1"
+    (d,) = store.bucket_dirs()
+    assert len(_parquet_files(d)) == 1
+    want = sorted([r for r in rows if r[0] != 5] + [(5, 20, "v5b")])
+    assert sorted(tuple(r) for r in store.read(spark).collect()) == want
+
+    floor = SnapshotStore(str(tmp_path / "eight"), ["k"], "ts", n_buckets=8)
+    floor.upsert(spark.createDataFrame(rows, schema))
+    assert floor.n_buckets == 8 and len(floor.bucket_dirs()) == 8
+    assert SnapshotStore(str(tmp_path / "five"), ["k"], "ts", n_buckets=5).n_buckets == 8
+
+
+def test_store_grows_by_one_full_rewrite(spark, tmp_path, caplog):
+    """A target below the store's file bytes makes the next upsert
+    re-bucket: one full rewrite into the power-of-two count that puts
+    at most half the target in each bucket, logged once at INFO. The
+    snapshot stays latest-per-key, the manifest records the count, and
+    diff() across the re-bucketing commit equals multiset_diff of the
+    two reads. At the same target the next upsert keeps the count and
+    rewrites only its bucket."""
+    import hashlib
+    import logging
+
+    from fink_joiner_spark.streaming.dedup_stream import multiset_diff
+
+    schema = "k long, ts long, v string"
+    rows = [(k, 10, hashlib.md5(str(k).encode()).hexdigest()) for k in range(2000)]
+    store = SnapshotStore(str(tmp_path / "snap"), ["k"], "ts", keep_commits=5)
+    store.upsert(spark.createDataFrame(rows, schema))
+    assert store.n_buckets == 1
+    (d,) = store.bucket_dirs()
+    size = sum(os.path.getsize(os.path.join(d, f)) for f in _parquet_files(d))
+    before = spark.createDataFrame(store.read(spark).collect(), schema)
+
+    target = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    was = spark.conf.get(target)
+    spark.conf.set(target, f"{size // 6}b")  # 2 * size / target = 12 -> 16
+    try:
+        batch = [(k, 20, f"w{k}") for k in range(0, 2000, 97)]
+        with caplog.at_level(logging.DEBUG, logger="fink_joiner_spark.streaming.dedup_stream"):
+            store.upsert(spark.createDataFrame(batch, schema))
+        infos = [r.getMessage() for r in caplog.records if r.levelno == logging.INFO]
+        assert len(infos) == 1 and "1 -> 16 buckets" in infos[0], infos
+        debug = [r.getMessage() for r in caplog.records if r.levelno == logging.DEBUG]
+        assert any("n_buckets=16" in m and "est_bytes=" in m for m in debug), debug
+        assert store.n_buckets == 16
+        assert store._store(spark).annotation("_n_buckets") == "16"
+        dirs = store.bucket_dirs()
+        assert len(dirs) == 16 and all(len(_parquet_files(x)) == 1 for x in dirs)
+
+        new_keys = {k for k, _, _ in batch}
+        want = sorted([r for r in rows if r[0] not in new_keys] + batch)
+        assert sorted(tuple(r) for r in store.read(spark).collect()) == want
+        v1, v2 = store._store(spark).committed_versions()[-2:]
+        after = spark.createDataFrame(store.read(spark).collect(), schema)
+        assert _bag(store.diff(spark, from_version=v1, to_version=v2).collect()) == _bag(
+            multiset_diff(after, before).collect()
+        )
+
+        store.upsert(spark.createDataFrame([(3, 30, "z")], schema))
+        assert store.n_buckets == 16
+        v3 = store.current_version()
+        assert len([x for x in store.bucket_dirs() if f"v{v3:06d}" in x]) == 1
+    finally:
+        spark.conf.set(target, was)
+
+
+def test_unrecorded_store_reads_upserts_and_records_count(spark, tmp_path):
+    """A store committed before bucket counts were recorded (32
+    buckets, no ``_n_buckets`` annotation) reads back as is; its next
+    upsert re-buckets it whole into the fitted count, every key once,
+    and records that count."""
+    schema = "k long, ts long, v string"
+    rows = [(k, 10, f"v{k}") for k in range(64)]
+    path = str(tmp_path / "snap")
+    SnapshotStore(path, ["k"], "ts", n_buckets=32).upsert(spark.createDataFrame(rows, schema))
+    store = SnapshotStore(path, ["k"], "ts")
+    _drop_annotation(spark, store, "_n_buckets")
+    assert len(store.bucket_dirs()) > 16
+    assert sorted(tuple(r) for r in store.read(spark).collect()) == rows
+
+    store.upsert(spark.createDataFrame([(5, 20, "v5b"), (100, 1, "new")], schema))
+    want = sorted([r for r in rows if r[0] != 5] + [(5, 20, "v5b"), (100, 1, "new")])
+    assert sorted(tuple(r) for r in store.read(spark).collect()) == want
+    assert store._store(spark).annotation("_n_buckets") == "1"
+    assert store.n_buckets == 1 and len(store.bucket_dirs()) == 1
+
+
+def test_reopened_with_other_bucket_count_keeps_each_key_once(spark, tmp_path):
+    """Reopening a store with a different n_buckets must not strand a
+    key's old row in a bucket the new count no longer maps the key to,
+    whether the new count is higher or lower."""
+    schema = "k long, ts long, v string"
+    rows = [(k, 10, f"v{k}") for k in range(64)]
+    for first, second in ((4, 8), (8, 2)):
+        path = str(tmp_path / f"snap_{first}_{second}")
+        SnapshotStore(path, ["k"], "ts", n_buckets=first).upsert(
+            spark.createDataFrame(rows, schema)
+        )
+        store = SnapshotStore(path, ["k"], "ts", n_buckets=second)
+        batch = [(k, 20, f"w{k}") for k in range(10)]
+        store.upsert(spark.createDataFrame(batch, schema))
+        got = sorted(tuple(r) for r in store.read(spark).collect())
+        assert got == sorted(batch + rows[10:]), (first, second)
 
 
 def test_retract_fidelity_single_reversion(spark, tmp_path):
